@@ -314,8 +314,13 @@ def _rest_json(spark, path: str):
 
 
 def _spill_bytes(spark) -> int | None:
-    """Cumulative memory+disk bytes spilled across all stages so far
-    (monotone counter: sample before/after an op and diff)."""
+    """Cumulative memory+disk bytes spilled across the completed stages
+    the UI still retains (sample before/after an op and diff).
+
+    Caveat: the UI keeps only ``spark.ui.retainedStages`` (default 1000)
+    completed stages, so on a long soak earlier stages can be evicted
+    between the two samples. The difference then undercounts and can
+    even go negative; callers clamp it at 0."""
     stages = _rest_json(spark, "/stages?status=complete")
     if stages is None:
         return None
@@ -419,8 +424,9 @@ def main() -> None:
         note = ""
         if name in SPILL_GRADE:
             if spill_before is not None and spill_after is not None:
-                result[name][f"spill_bytes_{n}x"] = spill_after - spill_before
-                note += f" spill {spill_after - spill_before}B"
+                spill = max(0, spill_after - spill_before)
+                result[name][f"spill_bytes_{n}x"] = spill
+                note += f" spill {spill}B"
             if storage is not None:
                 result[name][f"storage_mem_bytes_{n}x"] = storage[0]
                 result[name][f"storage_disk_bytes_{n}x"] = storage[1]

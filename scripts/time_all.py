@@ -35,6 +35,9 @@ def main() -> None:
                 reps = int(a.split("=", 1)[1])
             else:
                 i += 1
+                if i >= len(raw):
+                    sys.exit("usage: time_all.py [sf_dir] [--reps=N] "
+                             "[name ...]: --reps requires a value")
                 reps = int(raw[i])
         elif not a.startswith("--"):
             argv.append(a)

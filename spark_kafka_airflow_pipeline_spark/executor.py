@@ -20,6 +20,14 @@ Differences from the reference, all documented in SURVEY.md:
   ``MatchError`` (``:117-146``).
 - **Cache lifecycle**: the split point is cached (as the reference does,
   ``:65``) and unpersisted after all sinks are written.
+- **Streaming fan-out**: a streaming dataflow starts ONE
+  ``foreach_batch_sink`` query per distinct frame that sinks read (not
+  one per sink), so each source file is read and validated once however
+  many sinks consume it. The group's checkpoint sits at
+  ``<first sink path>/<first sink name>.checkpoint``; with more than one
+  sink the micro-batch is persisted once and written to each. Nodes
+  that read different frames (an ok sink and a ko sink) still run one
+  query each. All sink checks run before any write or query start.
 """
 
 from __future__ import annotations
@@ -29,11 +37,15 @@ import logging
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_kafka_airflow_pipeline_spark.io.sinks import write_sink
+from spark_kafka_airflow_pipeline_spark.io.sinks import (
+    check_streaming_sink,
+    write_sink,
+)
 from spark_kafka_airflow_pipeline_spark.io.sources import read_source, read_sources_union
 from spark_kafka_airflow_pipeline_spark.metadata import (
     Dataflow,
     DataflowMetadata,
+    Sink,
     Transformation,
 )
 from spark_kafka_airflow_pipeline_spark.transforms import add_fields
@@ -75,25 +87,41 @@ class PipelineExecutor:
     def run_dataflow(self, flow: Dataflow) -> dict[str, DataFrame]:
         nodes, cached = self._build(flow)
         try:
+            # every sink check runs before any write or query start, so
+            # a bad sink late in the list cannot fail after earlier
+            # sinks already wrote
+            streams: dict[int, list[Sink]] = {}
             for sink in flow.sinks:
                 if sink.input not in nodes:
                     raise KeyError(
                         f"sink of dataflow {flow.name!r} references unknown node "
                         f"{sink.input!r}; known nodes: {sorted(nodes)}")
+                if nodes[sink.input].isStreaming:
+                    check_streaming_sink(sink)
+                    # keyed by the frame itself, so aliases of one node
+                    # (``v`` and ``v_ok``) share a query
+                    streams.setdefault(id(nodes[sink.input]), []).append(sink)
+            for sink in flow.sinks:
                 out = nodes[sink.input]
                 if out.isStreaming:
+                    group = streams.pop(id(out), None)
+                    if group is None:  # already drained with its group
+                        continue
                     # streaming dataflow: drain what the source has via
-                    # foreachBatch into the same batch sink writers
-                    # (availableNow = bounded run; a service deployment
-                    # would start() and keep the query handle instead).
-                    # Checkpoint lives beside the sink output.
+                    # ONE foreachBatch query per distinct sink input,
+                    # fanning each micro-batch out to the group's batch
+                    # sink writers (availableNow = bounded run; a
+                    # service deployment would start() and keep the
+                    # query handle instead). The checkpoint lives
+                    # beside the group's first sink output.
                     from spark_kafka_airflow_pipeline_spark.io.sinks import (
                         foreach_batch_sink,
                     )
 
+                    first = group[0]
                     q = foreach_batch_sink(
-                        out, sink,
-                        checkpoint=f"{sink.paths[0]}/{sink.name}.checkpoint",
+                        out, *group,
+                        checkpoint=f"{first.paths[0]}/{first.name}.checkpoint",
                         available_now=True)
                     q.awaitTermination()
                 elif self.observe_metrics:

@@ -12,7 +12,7 @@ Engine extensions for scale:
 - parquet as the default format (columnar + stats + pushdown) where the
   reference defaults to the configured string;
 - streaming variants via ``writeStream`` / ``foreachBatch`` reusing the
-  same batch writers.
+  same batch writers; one ``foreachBatch`` query can feed several sinks.
 """
 
 from __future__ import annotations
@@ -137,29 +137,17 @@ def write_stream_to_kafka(df: DataFrame, bootstrap_servers: str, topic: str,
             .start())
 
 
-def foreach_batch_sink(df: DataFrame, sink: Sink, checkpoint: str,
-                       available_now: bool = False):
-    """Streaming wrapper that reuses the batch ``write_sink`` per
-    micro-batch — the idiomatic way to stream into any batch-only
-    format. ``available_now=True`` drains everything currently in the
-    source and stops (bounded backfill / test runs); the default runs
-    continuously.
+def check_streaming_sink(sink: Sink) -> None:
+    """Raise unless ``sink`` is safe to write once per micro-batch.
 
     Only ``saveMode: append`` is accepted: each micro-batch issues one
     batch write, so an OVERWRITE sink would clobber every previous
-    batch's output — silent data loss on any multi-batch stream. A
-    non-append mode raises up front rather than at the Nth micro-batch.
-
-    Exactly-once note: the checkpoint records which source files/offsets
-    were already processed, so a RERUN against the same checkpoint
-    skips everything previously seen (no duplicate appends) — delete
-    the checkpoint directory to reprocess from scratch.
-    """
+    batch's output — silent data loss on any multi-batch stream. The
+    upsert sink is exempt: each micro-batch MERGES into state (its
+    overwrite IS the merge), so it is multi-batch-safe by construction
+    regardless of the declared saveMode."""
     if (sink.saveMode.lower() != "append"
             and sink.format.lower() != "upsert"):
-        # the upsert sink is exempt: each micro-batch MERGES into state
-        # (its overwrite IS the merge), so it is multi-batch-safe by
-        # construction regardless of the declared saveMode
         raise ValueError(
             f"streaming sink {sink.name!r} has saveMode "
             f"{sink.saveMode!r}: foreachBatch re-runs the batch writer "
@@ -167,8 +155,51 @@ def foreach_batch_sink(df: DataFrame, sink: Sink, checkpoint: str,
             "clobber previous batches). Declare the sink as append, or "
             "run the dataflow as batch.")
 
+
+def foreach_batch_sink(df: DataFrame, *sinks: Sink, checkpoint: str,
+                       available_now: bool = False):
+    """One streaming query that writes each micro-batch to every sink
+    in ``sinks`` through the batch ``write_sink`` — the idiomatic way
+    to stream into any batch-only format, and to fan one stream out to
+    several outputs without reading its source once per output.
+    ``available_now=True`` drains everything currently in the source
+    and stops (bounded backfill / test runs); the default runs
+    continuously. ``PipelineExecutor.run_dataflow`` starts one such
+    query per distinct streaming frame that sinks read, with the
+    checkpoint at the group's first sink (``<path>/<name>.checkpoint``).
+
+    Every sink must pass ``check_streaming_sink`` (append, or upsert);
+    a bad one raises before the query starts rather than at the Nth
+    micro-batch. With more than one sink the micro-batch is persisted
+    once, written to each sink in order and unpersisted; a single sink
+    reads it once, so it is not cached.
+
+    Delivery: the checkpoint records which source files/offsets were
+    already processed, and a micro-batch commits only after EVERY sink
+    wrote it. A RERUN against the same checkpoint skips committed
+    batches (no duplicate appends) — delete the checkpoint directory to
+    reprocess from scratch. If sink *k* fails, the batch stays
+    uncommitted for the whole group and the rerun writes sinks
+    1..*k*-1 again, so append sinks in a multi-sink group are
+    at-least-once under failure (as one sink already is when its
+    commit fails). The upsert sink's argmax merge is idempotent, so it
+    converges regardless.
+    """
+    if not sinks:
+        raise TypeError("foreach_batch_sink needs at least one sink")
+    for sink in sinks:
+        check_streaming_sink(sink)
+    shared = len(sinks) > 1
+
     def _write(batch_df: DataFrame, _batch_id: int) -> None:
-        write_sink(batch_df, sink)
+        if shared:
+            batch_df.persist()
+        try:
+            for sink in sinks:
+                write_sink(batch_df, sink)
+        finally:
+            if shared:
+                batch_df.unpersist()
 
     writer = (df.writeStream.foreachBatch(_write)
               .option("checkpointLocation", checkpoint))

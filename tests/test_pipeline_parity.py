@@ -677,6 +677,38 @@ def test_streaming_dataflow_rejects_overwrite_sink(spark, tmp_path):
         PipelineExecutor(spark).process(meta)
 
 
+def test_streaming_dataflow_checks_every_sink_before_start(spark, tmp_path):
+    """An OVERWRITE sink declared AFTER a valid append sink on the same
+    streaming node must fail before anything runs: the append sink
+    writes no output and no checkpoint directory is created."""
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "part1.json").write_text(
+        "\n".join(json.dumps(r) for r in FIXTURE_ROWS))
+    out = tmp_path / "o"
+    meta = parse_metadata({
+        "dataflows": [{
+            "name": "stream-late-overwrite",
+            "sources": [{"name": "person_inputs", "path": str(src),
+                         "format": "JSON", "streaming": True,
+                         "schema": "name string, age long, office string"}],
+            "transformations": [],
+            "sinks": [
+                {"input": "person_inputs", "name": "first",
+                 "paths": [str(out)], "format": "PARQUET",
+                 "saveMode": "APPEND"},
+                {"input": "person_inputs", "name": "second",
+                 "paths": [str(out)], "format": "PARQUET",
+                 "saveMode": "OVERWRITE"},
+            ],
+        }]
+    })
+    with pytest.raises(ValueError, match="only 'append' is safe"):
+        PipelineExecutor(spark).process(meta)
+    assert not (out / "first").exists()
+    assert not list(tmp_path.rglob("*.checkpoint"))
+
+
 def test_declarative_topk_global_and_grouped(spark, sf_dir):
     """`topk` transformation type: global top-n (orderBy+limit,
     lowers to TakeOrderedAndProject) and per-group top-n (one

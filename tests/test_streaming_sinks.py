@@ -3,6 +3,7 @@ path (broker-free), and watermark-bounded streaming dedup semantics."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from spark_kafka_airflow_pipeline_spark.io.sinks import (
@@ -543,3 +544,182 @@ def test_metadata_streaming_upsert_restart_recovery(spark, sf_dir,
     text = "".join(p.read_text() for p in logs)
     assert text.count("h1.parquet") == 1
     assert text.count("h2.parquet") == 1
+
+
+FANOUT_SCHEMA = "seq long, user_id long, name string, value double"
+
+
+def _write_fanout_source(src) -> list[dict]:
+    """Three small JSON files; every 4th row fails one validation rule
+    (empty name or negative value). Returns all rows written."""
+    import json as _json
+
+    src.mkdir()
+    rows = []
+    for f in range(3):
+        part = []
+        for i in range(12):
+            seq = f * 12 + i
+            bad = seq % 4 == 3
+            part.append({"seq": seq, "user_id": seq % 5,
+                         "name": "" if bad and seq % 8 == 3 else f"u{seq}",
+                         "value": -1.0 if bad and seq % 8 == 7 else seq * 1.5})
+        (src / f"part{f}.json").write_text(
+            "\n".join(_json.dumps(r) for r in part))
+        rows += part
+    return rows
+
+
+def _fanout_flow(src, out_root, sinks, streaming=True):
+    from spark_kafka_airflow_pipeline_spark.metadata import parse_metadata
+
+    return parse_metadata({"dataflows": [{
+        "name": "fanout",
+        "sources": [{"name": "events", "path": str(src), "format": "JSON",
+                     "streaming": streaming, "schema": FANOUT_SCHEMA,
+                     "options": {"maxFilesPerTrigger": "1"}}],
+        "transformations": [
+            {"name": "validation", "type": "validate_fields", "params": {
+                "input": "events", "validations": [
+                    {"field": "name", "validations": ["notEmpty"]},
+                    {"field": "value", "validations": ["nonNegative"]}]}}],
+        "sinks": [dict(s, paths=[str(out_root)]) for s in sinks],
+    }]}).dataflows[0]
+
+
+def _source_log_text(ckpt: str) -> str:
+    from pathlib import Path
+
+    logs = [p for p in Path(ckpt, "sources", "0").glob("*")
+            if p.is_file() and p.name.isdigit()]
+    return "".join(p.read_text() for p in logs)
+
+
+def test_streaming_fanout_one_query_per_sink_input(spark, tmp_path):
+    """Sinks that read the same streaming frame share ONE query: two
+    append sinks on the ok split (one through the bare ``validation``
+    alias, the same frame as ``validation_ok``) and one on the ko split
+    start 2 queries, not 3. The shared checkpoint sits at the first
+    sink of the group and lists each source file exactly once, and
+    every sink holds the same rows as a batch run of the metadata."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from spark_kafka_airflow_pipeline_spark.executor import PipelineExecutor
+
+    class Started(StreamingQueryListener):
+        def __init__(self):
+            self.n = 0
+
+        def onQueryStarted(self, event):
+            self.n += 1
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    src = tmp_path / "src"
+    _write_fanout_source(src)
+    sinks = [
+        {"input": "validation_ok", "name": "ok_a", "format": "PARQUET",
+         "saveMode": "APPEND"},
+        {"input": "validation", "name": "ok_b", "format": "PARQUET",
+         "saveMode": "APPEND"},
+        {"input": "validation_ko", "name": "ko", "format": "PARQUET",
+         "saveMode": "APPEND"},
+    ]
+    listener = Started()
+    spark.streams.addListener(listener)
+    try:
+        PipelineExecutor(spark).run_dataflow(
+            _fanout_flow(src, tmp_path / "out", sinks))
+        spark._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    finally:
+        spark.streams.removeListener(listener)
+    assert listener.n == 2
+
+    ckpts = sorted(p.name for p in (tmp_path / "out").glob("*.checkpoint"))
+    assert ckpts == ["ko.checkpoint", "ok_a.checkpoint"]
+    text = _source_log_text(f"{tmp_path}/out/ok_a.checkpoint")
+    for f in range(3):
+        assert text.count(f"part{f}.json") == 1
+
+    PipelineExecutor(spark).run_dataflow(
+        _fanout_flow(src, tmp_path / "batch", sinks, streaming=False))
+
+    def rows(root, name):
+        return [tuple(r) for r in spark.read.parquet(f"{root}/{name}")
+                .orderBy("seq").collect()]
+
+    for name in ("ok_a", "ok_b", "ko"):
+        got = rows(tmp_path / "out", name)
+        assert got and got == rows(tmp_path / "batch", name), name
+
+
+def test_streaming_fanout_replays_group_after_sink_failure(
+        spark, tmp_path, monkeypatch):
+    """Delivery semantics of a multi-sink group: when the upsert sink
+    (second in the group) fails on the first micro-batch, the batch
+    stays uncommitted for the WHOLE group, so a rerun on the same
+    checkpoint writes the append sink again (at-least-once) and the
+    upsert state, an idempotent argmax merge, converges to the state of
+    an uninterrupted run."""
+    from pyspark.errors import StreamingQueryException
+
+    from spark_kafka_airflow_pipeline_spark.executor import PipelineExecutor
+    from spark_kafka_airflow_pipeline_spark.io import sinks as sinks_mod
+
+    src = tmp_path / "src"
+    written = _write_fanout_source(src)
+    ok_seqs = {r["seq"] for r in written
+               if r["name"] != "" and r["value"] >= 0}
+    sinks = [
+        {"input": "validation_ok", "name": "events", "format": "PARQUET",
+         "saveMode": "APPEND"},
+        {"input": "validation_ok", "name": "current", "format": "upsert",
+         "saveMode": "append",
+         "options": {"keys": "user_id", "orderBy": "seq"}},
+    ]
+
+    def state(root):
+        return sorted(map(tuple, spark.read.parquet(f"{root}/current")
+                          .collect()))
+
+    PipelineExecutor(spark).run_dataflow(
+        _fanout_flow(src, tmp_path / "ref", sinks))
+    expected = state(tmp_path / "ref")
+    assert expected
+
+    real_write = sinks_mod.write_sink
+    failed = []
+
+    def flaky_write(df, sink):
+        if sink.format == "upsert" and not failed:
+            failed.append(sink.name)
+            raise RuntimeError("injected upsert failure")
+        real_write(df, sink)
+
+    monkeypatch.setattr(sinks_mod, "write_sink", flaky_write)
+    with pytest.raises(StreamingQueryException, match="injected"):
+        PipelineExecutor(spark).run_dataflow(
+            _fanout_flow(src, tmp_path / "out", sinks))
+    assert failed == ["current"]
+    # the append sink already wrote the failed batch; nothing committed
+    assert spark.read.parquet(f"{tmp_path}/out/events").count() > 0
+    assert not (tmp_path / "out" / "current").exists()
+
+    monkeypatch.undo()
+    PipelineExecutor(spark).run_dataflow(
+        _fanout_flow(src, tmp_path / "out", sinks))
+    assert state(tmp_path / "out") == expected
+    seqs = [r["seq"] for r in
+            spark.read.parquet(f"{tmp_path}/out/events").collect()]
+    assert set(seqs) == ok_seqs
+    assert len(seqs) > len(ok_seqs)  # the replayed batch was appended twice
+    text = _source_log_text(f"{tmp_path}/out/events.checkpoint")
+    for f in range(3):
+        assert text.count(f"part{f}.json") == 1
