@@ -16,8 +16,10 @@ Differences from the reference, all documented in SURVEY.md:
   ``:59``).
 - **Single-pass split** with exact partitioning NULL semantics
   (see ``transforms.validate_fields``).
-- **Unknown sink tags raise** a named error instead of Scala
-  ``MatchError`` (``:117-146``).
+- **Metadata is checked before any source is read**, in plain Python
+  (``check_dataflow``): unknown kinds, unknown node or sink tags and
+  missing params raise a named error instead of Scala ``MatchError``
+  (``:117-146``), and start no Spark job.
 - **Cache lifecycle**: the split point is cached (as the reference does,
   ``:65``) and unpersisted after all sinks are written.
 - **Streaming fan-out**: a streaming dataflow starts ONE
@@ -59,12 +61,8 @@ log = logging.getLogger(__name__)
 class PipelineExecutor:
     """Executes dataflows; one DataFrame lineage per dataflow."""
 
-    def __init__(self, spark: SparkSession, debug_show: bool = False,
-                 observe_metrics: bool = False):
+    def __init__(self, spark: SparkSession, observe_metrics: bool = False):
         self.spark = spark
-        # the reference force-computes both splits with show(false)
-        # (PipelineProcessor.scala:70, :84); gate that behind a flag
-        self.debug_show = debug_show
         # per-sink row accounting via df.observe(): the count rides the
         # WRITE job itself (an accumulator over rows as they stream to
         # the sink) — no second scan, no cache, exact even at 100 TB.
@@ -78,10 +76,13 @@ class PipelineExecutor:
     def process(self, metadata: DataflowMetadata) -> dict[str, dict[str, DataFrame]]:
         """Run every dataflow (reference ``process()``, ``:13-42``).
 
-        Returns ``{dataflow_name: {node_name: DataFrame}}`` so tests and
+        Checks every dataflow before it runs the first. Returns
+        ``{dataflow_name: {node_name: DataFrame}}`` so tests and
         notebooks can inspect intermediate nodes; the reference returns
         Unit and only writes sinks.
         """
+        for flow in metadata.dataflows:
+            check_dataflow(flow)
         return {df.name: self.run_dataflow(df) for df in metadata.dataflows}
 
     def run_dataflow(self, flow: Dataflow) -> dict[str, DataFrame]:
@@ -92,10 +93,6 @@ class PipelineExecutor:
             # sinks already wrote
             streams: dict[int, list[Sink]] = {}
             for sink in flow.sinks:
-                if sink.input not in nodes:
-                    raise KeyError(
-                        f"sink of dataflow {flow.name!r} references unknown node "
-                        f"{sink.input!r}; known nodes: {sorted(nodes)}")
                 if nodes[sink.input].isStreaming:
                     check_streaming_sink(sink)
                     # keyed by the frame itself, so aliases of one node
@@ -134,7 +131,7 @@ class PipelineExecutor:
                 else:
                     write_sink(out, sink)
         finally:
-            # cached frames are tracked explicitly at _apply time: the
+            # cached frames are tracked explicitly at _build time: the
             # split point caches its internal ANNOTATED parent, whose
             # ok/ko children report is_cached == False — scanning node
             # outputs would find nothing and leak the cache entry per
@@ -150,6 +147,7 @@ class PipelineExecutor:
         return self._build(flow)[0]
 
     def _build(self, flow: Dataflow) -> tuple[dict[str, DataFrame], list[DataFrame]]:
+        check_dataflow(flow)
         nodes: dict[str, DataFrame] = {}
         cached: list[DataFrame] = []
         for source in flow.sources:
@@ -159,8 +157,19 @@ class PipelineExecutor:
         nodes["__sources__"] = union_all
 
         for t in flow.transformations:
-            upstream = self._resolve_input(t, nodes, source_names)
-            self._apply(t, upstream, nodes, cached)
+            df = self._resolve_input(t, nodes, source_names)
+            if t.type != "validate_fields":
+                nodes[t.name] = _BUILDERS[t.type](t, df, nodes)
+                continue
+            # streaming frames cannot cache; the split re-evaluates per
+            # micro-batch instead (bounded work per batch)
+            ok, ko, cached_parent = validate_fields_split(
+                df, t.params.validations, cache=not df.isStreaming)
+            if cached_parent is not None:
+                cached.append(cached_parent)
+            nodes[f"{t.name}_ok"] = ok
+            nodes[f"{t.name}_ko"] = ko
+            nodes[t.name] = ok  # bare name == valid split, for chaining
         return nodes, cached
 
     # -- internals ----------------------------------------------------
@@ -182,235 +191,220 @@ class PipelineExecutor:
                      "using the union of all sources (reference semantics)",
                      t.name, name)
             return nodes["__sources__"]
-        if name not in nodes:
-            raise KeyError(f"transformation {t.name!r} references unknown input "
-                           f"{name!r}; known nodes: {sorted(nodes)}")
         return nodes[name]
 
-    def _apply(self, t: Transformation, df: DataFrame,
-               nodes: dict[str, DataFrame],
-               cached: list[DataFrame]) -> None:
-        kind = t.type
-        if kind == "add_fields":
-            nodes[t.name] = add_fields(df, t.params.addFields)
-        elif kind == "validate_fields":
-            # streaming frames cannot cache; the split re-evaluates per
-            # micro-batch instead (bounded work per batch)
-            ok, ko, cached_parent = validate_fields_split(
-                df, t.params.validations, cache=not df.isStreaming)
-            if cached_parent is not None:
-                cached.append(cached_parent)
-            if self.debug_show and not ok.isStreaming:
-                ok.show(truncate=False)
-                ko.show(truncate=False)
-            nodes[f"{t.name}_ok"] = ok
-            nodes[f"{t.name}_ko"] = ko
-            nodes[t.name] = ok  # bare name == valid split, for chaining
-        elif kind == "sql":
-            for name, frame in nodes.items():
-                if not name.startswith("__"):
-                    frame.createOrReplaceTempView(name)
-            nodes[t.name] = self.spark.sql(t.params.sql)
-        elif kind == "filter":
-            nodes[t.name] = df.filter(t.params.expr)
-        elif kind == "select":
-            nodes[t.name] = df.select(*t.params.columns)
-        elif kind == "drop":
-            nodes[t.name] = df.drop(*t.params.columns)
-        elif kind == "dedup":
-            cols = t.params.columns or None
-            nodes[t.name] = df.dropDuplicates(cols)
-        elif kind == "sort":
-            # "-col" sorts descending, bare name ascending
-            if not t.params.columns:
-                raise ValueError(f"sort {t.name!r} declares no columns")
-            keys = [F.col(c[1:]).desc() if c.startswith("-") else F.col(c)
-                    for c in t.params.columns]
-            nodes[t.name] = df.orderBy(*keys)
-        elif kind == "limit":
-            if t.params.n is None or t.params.n < 0:
-                raise ValueError(f"limit {t.name!r} needs a non-negative 'n'")
-            nodes[t.name] = df.limit(t.params.n)
-        elif kind == "rename":
-            if not t.params.mapping:
-                raise ValueError(f"rename {t.name!r} declares no mapping")
-            nodes[t.name] = df.withColumnsRenamed(t.params.mapping)
-        elif kind == "join":
-            if t.params.right not in nodes:
-                raise KeyError(f"join {t.name!r} references unknown right "
-                               f"node {t.params.right!r}; known: {sorted(nodes)}")
-            if not t.params.on and t.params.how != "cross":
-                # a metadata file that omits 'on' would silently plan a
-                # cartesian product — a runaway job at scale; cartesian
-                # intent must be explicit via how="cross"
-                raise ValueError(
-                    f"join {t.name!r} declares no join keys ('on'); "
-                    f"set how='cross' to request a cartesian product")
-            nodes[t.name] = df.join(nodes[t.params.right],
-                                    on=t.params.on or None,
-                                    how=t.params.how)
-        elif kind == "aggregate":
-            aggs = [F.expr(a.function).alias(a.name)
-                    for a in t.params.aggregates]
-            if not aggs:
-                raise ValueError(f"aggregate {t.name!r} declares no aggregates")
-            # groupBy entries are full expression strings ("x AS alias"
-            # allowed), so configs can group on computed keys — e.g. the
-            # streaming time bucket window(ts, '1 hour') AS w. Plain
-            # column names parse unchanged.
-            keys = [F.expr(g) for g in t.params.groupBy]
-            nodes[t.name] = df.groupBy(*keys).agg(*aggs)
-        elif kind == "watermark":
-            # event-time watermark: the declarative knob that bounds
-            # streaming state (and admits append-mode window aggs).
-            # Harmless no-op semantics on batch frames, same as Spark.
-            if not t.params.column or not t.params.delay:
-                raise ValueError(
-                    f"watermark {t.name!r} needs 'column' and 'delay'")
-            nodes[t.name] = df.withWatermark(t.params.column, t.params.delay)
-        elif kind == "union":
-            names = t.params.inputs
-            missing = [n for n in names if n not in nodes]
-            if missing:
-                raise KeyError(f"union {t.name!r} references unknown nodes "
-                               f"{missing}; known: {sorted(nodes)}")
-            frames = [nodes[n] for n in names] or [df]
-            out = frames[0]
-            for f in frames[1:]:
-                out = out.unionByName(f, allowMissingColumns=True)
-            nodes[t.name] = out
-        elif kind == "dedup_near":
-            # near-duplicate removal as a DECLARATIVE step: the same
-            # MinHash-LSH pipeline the operator library exposes
-            # (signature pass -> banded buckets -> estimate filter ->
-            # exact-Jaccard verify), then keep-first survivorship —
-            # drop every doc that is the LARGER end of a verified pair
-            # (deterministic; the kept set is exactly the pair-graph
-            # minima). All bounded-bucket, no all-pairs join — the
-            # operator library's scale posture carries over verbatim.
-            from spark_kafka_airflow_pipeline_spark.functions import (
-                text as T,
-            )
-            from spark_kafka_airflow_pipeline_spark.operators.dedup import (
-                estimate_filter_pairs,
-                lsh_band_candidates,
-                minhash_signature_agg,
-                verify_pairs_jaccard,
-            )
 
-            if not t.params.idColumn:
-                raise ValueError(
-                    f"dedup_near {t.name!r} needs 'idColumn' (a unique "
-                    "document id)")
-            d = df.select(F.col(t.params.idColumn).alias("doc_id"),
-                          F.col(t.params.textColumn).alias("text"))
-            if t.params.hashFamily == "md5":
-                # portable family: every hash is md5-derived, so the
-                # declared step is value-hash provable against a DuckDB
-                # twin (MINHASH_MD5_SQL) — the config-driven path to
-                # the engine's oracled near-dedup
-                from spark_kafka_airflow_pipeline_spark.operators.dedup import (
-                    md5_minhash_verified_pairs,
-                )
+# Required params per kind, as (kind, condition on params, message),
+# checked in order by ``check_dataflow``.
+_REQUIRED = (
+    ("sort", lambda p: p.columns, "declares no columns"),
+    ("limit", lambda p: p.n is not None and p.n >= 0,
+     "needs a non-negative 'n'"),
+    ("rename", lambda p: p.mapping, "declares no mapping"),
+    # a metadata file that omits 'on' would silently plan a
+    # cartesian product — a runaway job at scale; cartesian
+    # intent must be explicit via how="cross"
+    ("join", lambda p: p.on or p.how == "cross",
+     "declares no join keys ('on'); set how='cross' to request a "
+     "cartesian product"),
+    ("aggregate", lambda p: p.aggregates, "declares no aggregates"),
+    ("watermark", lambda p: p.column and p.delay,
+     "needs 'column' and 'delay'"),
+    ("dedup_near", lambda p: p.idColumn,
+     "needs 'idColumn' (a unique document id)"),
+    ("fingerprint", lambda p: p.idColumn,
+     "needs 'idColumn' (a unique document id)"),
+    ("window", lambda p: p.fields, "declares no fields"),
+    ("topk", lambda p: p.n is not None and p.n > 0, "needs a positive 'n'"),
+    ("topk", lambda p: p.orderBy, "declares no orderBy"),
+)
 
-                grams = (d.select(
-                    "doc_id", T.split_tokens("text").alias("toks"))
-                    .select(
-                        "doc_id",
-                        F.array_distinct(T.raw_shingles_of(F.col("toks"), 3))
-                        .alias("grams")))
-                pairs = md5_minhash_verified_pairs(
-                    grams, t.params.threshold)
-            else:
-                tokens = lambda c: T.shingles(c, 3)  # noqa: E731
-                sigs = minhash_signature_agg(d, num_hashes=16,
-                                             tokens=tokens)
-                cand = lsh_band_candidates(sigs, 16, 4, distinct=False,
-                                           carry="minhash")
-                good = estimate_filter_pairs(cand, 16, t.params.threshold)
-                pairs = verify_pairs_jaccard(good, d, tokens,
-                                             t.params.threshold)
-            drop = pairs.select(
-                F.col("doc_b").alias(t.params.idColumn)).distinct()
-            nodes[t.name] = df.join(drop, t.params.idColumn, "left_anti")
-        elif kind == "fingerprint":
-            # winnowing fingerprint summary as a DECLARATIVE step:
-            # annotate each row with its MOSS (k=3, w=4) fingerprint
-            # stats (count / xor checksum / min) — the config-driven
-            # path to the oracled winnow_fingerprints operator; the
-            # join back on the id preserves the full input schema
-            from spark_kafka_airflow_pipeline_spark.operators.textops import (
-                _winnow_selected,
-            )
 
-            if not t.params.idColumn:
-                raise ValueError(
-                    f"fingerprint {t.name!r} needs 'idColumn' (a unique "
-                    "document id)")
-            d = df.select(F.col(t.params.idColumn).alias("doc_id"),
-                          F.col(t.params.textColumn).alias("text"))
-            summary = (_winnow_selected(d)
-                       .groupBy("doc_id")
-                       .agg(F.count(F.lit(1)).alias("n_fps"),
-                            F.expr("bit_xor(fp)").alias("fp_xor"),
-                            F.min("fp").alias("fp_min"))
-                       .withColumnsRenamed({"doc_id": t.params.idColumn}))
-            nodes[t.name] = df.join(summary, t.params.idColumn)
-        elif kind == "window":
-            # declarative window functions: each field is a Spark SQL
-            # expression string evaluated over ONE shared window spec,
-            # so a multi-field step costs a single shuffle on the
-            # partition keys (the engine's window discipline — see
-            # operators.relational). "-col" in orderBy sorts descending.
-            if not t.params.fields:
-                raise ValueError(f"window {t.name!r} declares no fields")
-            from pyspark.sql import Window
-
-            spec = Window.partitionBy(*t.params.partitionBy) if \
-                t.params.partitionBy else Window.partitionBy()
-            if t.params.orderBy:
-                keys = [F.col(c[1:]).desc() if c.startswith("-")
-                        else F.col(c) for c in t.params.orderBy]
-                spec = spec.orderBy(*keys)
-            out = df
-            for f in t.params.fields:
-                out = out.withColumn(f.name, F.expr(f.function).over(spec))
-            nodes[t.name] = out
-        elif kind == "topk":
-            # declarative top-k: global (orderBy+limit lowers to
-            # TakeOrderedAndProject — per-partition heaps, no full
-            # sort) or per-group via one row_number window (single
-            # shuffle on the partition keys). Authors should order by a
-            # tie-breaking key set so the selected row SET is unique.
-            if t.params.n is None or t.params.n <= 0:
-                raise ValueError(f"topk {t.name!r} needs a positive 'n'")
-            if not t.params.orderBy:
-                raise ValueError(f"topk {t.name!r} declares no orderBy")
-            keys = [F.col(c[1:]).desc() if c.startswith("-") else F.col(c)
-                    for c in t.params.orderBy]
-            if t.params.partitionBy:
-                from pyspark.sql import Window
-
-                spec = Window.partitionBy(*t.params.partitionBy).orderBy(*keys)
-                nodes[t.name] = (
-                    df.withColumn("__rn", F.row_number().over(spec))
-                    .filter(F.col("__rn") <= t.params.n).drop("__rn"))
-            else:
-                nodes[t.name] = df.orderBy(*keys).limit(t.params.n)
-        elif kind in ("intersect", "except"):
-            # declarative set ops; params.all keeps duplicate
-            # multiplicity (SQL INTERSECT ALL / EXCEPT ALL). Both plan
-            # as one shuffle on the full row, like any distinct.
-            if t.params.right not in nodes:
-                raise KeyError(f"{kind} {t.name!r} references unknown right "
-                               f"node {t.params.right!r}; known: {sorted(nodes)}")
-            right = nodes[t.params.right]
-            if kind == "intersect":
-                nodes[t.name] = (df.intersectAll(right) if t.params.all
-                                 else df.intersect(right))
-            else:
-                nodes[t.name] = (df.exceptAll(right) if t.params.all
-                                 else df.subtract(right))
-        else:
+def check_dataflow(flow: Dataflow) -> None:
+    """Raise on metadata that cannot run, before any Spark work: a kind
+    not in ``_BUILDERS``, an ``input``/``right``/``inputs``/sink input
+    that names no source or EARLIER node (``KeyError``; ``v_ok`` and
+    ``v_ko`` follow a ``validate_fields`` ``v``), a missing required
+    param (``ValueError``). Validation-rule names, sink formats,
+    streaming sink modes and table names inside ``sql`` text need
+    Spark; they are checked where it runs."""
+    nodes = {s.name for s in flow.sources} | {"__sources__"}
+    for t in flow.transformations:
+        kind, p = t.type, t.params
+        if p.input is not None and p.input not in nodes:
+            raise KeyError(f"transformation {t.name!r} references unknown input "
+                           f"{p.input!r}; known nodes: {sorted(nodes)}")
+        if kind not in _BUILDERS:
             raise ValueError(f"unknown transformation type {kind!r} "
                              f"(node {t.name!r})")
+        if kind in ("join", "intersect", "except") and p.right not in nodes:
+            raise KeyError(f"{kind} {t.name!r} references unknown right "
+                           f"node {p.right!r}; known: {sorted(nodes)}")
+        missing = [n for n in p.inputs if n not in nodes]
+        if kind == "union" and missing:
+            raise KeyError(f"union {t.name!r} references unknown nodes "
+                           f"{missing}; known: {sorted(nodes)}")
+        for required_kind, ok, message in _REQUIRED:
+            if required_kind == kind and not ok(p):
+                raise ValueError(f"{kind} {t.name!r} {message}")
+        nodes.add(t.name)
+        if kind == "validate_fields":
+            nodes |= {f"{t.name}_ok", f"{t.name}_ko"}
+    for sink in flow.sinks:
+        if sink.input not in nodes:
+            raise KeyError(
+                f"sink of dataflow {flow.name!r} references unknown node "
+                f"{sink.input!r}; known nodes: {sorted(nodes)}")
+
+
+def _sort_keys(names: list[str]) -> list:
+    """Sort keys: "-col" descending, bare name ascending."""
+    return [F.col(c[1:]).desc() if c.startswith("-") else F.col(c)
+            for c in names]
+
+
+def _sql(t: Transformation, df: DataFrame, nodes: dict) -> DataFrame:
+    for name, frame in nodes.items():
+        if not name.startswith("__"):
+            frame.createOrReplaceTempView(name)
+    return df.sparkSession.sql(t.params.sql)
+
+
+def _aggregate(t: Transformation, df: DataFrame, nodes: dict) -> DataFrame:
+    aggs = [F.expr(a.function).alias(a.name) for a in t.params.aggregates]
+    # groupBy entries are full expression strings ("x AS alias"
+    # allowed), so configs can group on computed keys — e.g. the
+    # streaming time bucket window(ts, '1 hour') AS w. Plain
+    # column names parse unchanged.
+    keys = [F.expr(g) for g in t.params.groupBy]
+    return df.groupBy(*keys).agg(*aggs)
+
+
+def _union(t: Transformation, df: DataFrame, nodes: dict) -> DataFrame:
+    frames = [nodes[n] for n in t.params.inputs] or [df]
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f, allowMissingColumns=True)
+    return out
+
+
+def _dedup_near(t: Transformation, df: DataFrame, nodes: dict) -> DataFrame:
+    # near-duplicate removal as a DECLARATIVE step: the same
+    # MinHash-LSH pipeline the operator library exposes
+    # (signature pass -> banded buckets -> estimate filter ->
+    # exact-Jaccard verify), then keep-first survivorship —
+    # drop every doc that is the LARGER end of a verified pair
+    # (deterministic; the kept set is exactly the pair-graph
+    # minima). All bounded-bucket, no all-pairs join — the
+    # operator library's scale posture carries over verbatim.
+    from spark_kafka_airflow_pipeline_spark.functions import text as T
+    from spark_kafka_airflow_pipeline_spark.operators.dedup import (
+        md5_gram_sets,
+        md5_minhash_verified_pairs,
+        minhash_verified_pairs,
+    )
+
+    d = df.select(F.col(t.params.idColumn).alias("doc_id"),
+                  F.col(t.params.textColumn).alias("text"))
+    if t.params.hashFamily == "md5":
+        # portable family: every hash is md5-derived, so the
+        # declared step is value-hash provable against a DuckDB
+        # twin (MINHASH_MD5_SQL) — the config-driven path to
+        # the engine's oracled near-dedup
+        pairs = md5_minhash_verified_pairs(md5_gram_sets(d),
+                                           t.params.threshold)
+    else:
+        pairs = minhash_verified_pairs(d, lambda c: T.shingles(c, 3),
+                                       16, 4, t.params.threshold)
+    drop = pairs.select(F.col("doc_b").alias(t.params.idColumn)).distinct()
+    return df.join(drop, t.params.idColumn, "left_anti")
+
+
+def _fingerprint(t: Transformation, df: DataFrame, nodes: dict) -> DataFrame:
+    # winnowing fingerprint summary as a DECLARATIVE step:
+    # annotate each row with its MOSS (k=3, w=4) fingerprint
+    # stats (count / xor checksum / min) — the config-driven
+    # path to the oracled winnow_fingerprints operator; the
+    # join back on the id preserves the full input schema
+    from spark_kafka_airflow_pipeline_spark.operators.textops import (
+        winnow_summary,
+    )
+
+    d = df.select(F.col(t.params.idColumn).alias("doc_id"),
+                  F.col(t.params.textColumn).alias("text"))
+    summary = winnow_summary(d).withColumnsRenamed(
+        {"doc_id": t.params.idColumn})
+    return df.join(summary, t.params.idColumn)
+
+
+def _window(t: Transformation, df: DataFrame, nodes: dict) -> DataFrame:
+    # declarative window functions: each field is a Spark SQL
+    # expression string evaluated over ONE shared window spec,
+    # so a multi-field step costs a single shuffle on the
+    # partition keys (the engine's window discipline — see
+    # operators.relational). "-col" in orderBy sorts descending.
+    from pyspark.sql import Window
+
+    spec = Window.partitionBy(*t.params.partitionBy)
+    if t.params.orderBy:
+        spec = spec.orderBy(*_sort_keys(t.params.orderBy))
+    out = df
+    for f in t.params.fields:
+        out = out.withColumn(f.name, F.expr(f.function).over(spec))
+    return out
+
+
+def _topk(t: Transformation, df: DataFrame, nodes: dict) -> DataFrame:
+    # declarative top-k: global (orderBy+limit lowers to
+    # TakeOrderedAndProject — per-partition heaps, no full
+    # sort) or per-group via one row_number window (single
+    # shuffle on the partition keys). Authors should order by a
+    # tie-breaking key set so the selected row SET is unique.
+    keys = _sort_keys(t.params.orderBy)
+    if not t.params.partitionBy:
+        return df.orderBy(*keys).limit(t.params.n)
+    from pyspark.sql import Window
+
+    spec = Window.partitionBy(*t.params.partitionBy).orderBy(*keys)
+    return (df.withColumn("__rn", F.row_number().over(spec))
+            .filter(F.col("__rn") <= t.params.n).drop("__rn"))
+
+
+# kind -> build(t, df, nodes), returning the node's frame: the single
+# list of transformation kinds. Builders look module names up at call
+# time (never bound here) and hold no checks; check_dataflow has them.
+_BUILDERS = {
+    "add_fields": lambda t, df, nodes: add_fields(df, t.params.addFields),
+    # built in _build: it registers three names and a cache
+    "validate_fields": None,
+    "sql": _sql,
+    "filter": lambda t, df, nodes: df.filter(t.params.expr),
+    "select": lambda t, df, nodes: df.select(*t.params.columns),
+    "drop": lambda t, df, nodes: df.drop(*t.params.columns),
+    "dedup": lambda t, df, nodes: df.dropDuplicates(t.params.columns or None),
+    "sort": lambda t, df, nodes: df.orderBy(*_sort_keys(t.params.columns)),
+    "limit": lambda t, df, nodes: df.limit(t.params.n),
+    "rename": lambda t, df, nodes: df.withColumnsRenamed(t.params.mapping),
+    "join": lambda t, df, nodes: df.join(
+        nodes[t.params.right], on=t.params.on or None, how=t.params.how),
+    "aggregate": _aggregate,
+    # event-time watermark: the declarative knob that bounds
+    # streaming state (and admits append-mode window aggs).
+    # Harmless no-op semantics on batch frames, same as Spark.
+    "watermark": lambda t, df, nodes: df.withWatermark(
+        t.params.column, t.params.delay),
+    "union": _union,
+    "dedup_near": _dedup_near,
+    "fingerprint": _fingerprint,
+    "window": _window,
+    "topk": _topk,
+    # declarative set ops; params.all keeps duplicate
+    # multiplicity (SQL INTERSECT ALL / EXCEPT ALL). Both plan
+    # as one shuffle on the full row, like any distinct.
+    "intersect": lambda t, df, nodes: (
+        df.intersectAll(nodes[t.params.right]) if t.params.all
+        else df.intersect(nodes[t.params.right])),
+    "except": lambda t, df, nodes: (
+        df.exceptAll(nodes[t.params.right]) if t.params.all
+        else df.subtract(nodes[t.params.right])),
+}

@@ -107,10 +107,7 @@ class Transformation:
 
     Reference dispatches exactly two types: ``add_fields``
     (``PipelineProcessor.scala:25``) and ``validate_fields`` (``:35``).
-    The engine's registry adds: ``sql``, ``filter``, ``select``,
-    ``drop``, ``dedup``, ``join``, ``aggregate``, ``union``, ``sort``,
-    ``limit``, ``rename``, ``window``, ``dedup_near``, ``topk``,
-    ``intersect``, ``except``, ``watermark``.
+    The engine's kinds are the keys of ``executor._BUILDERS``.
     """
 
     name: str

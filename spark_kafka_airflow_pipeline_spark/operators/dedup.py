@@ -406,11 +406,20 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str,
     # portability, this murmur3/xxhash production path is free to
     # pick the fast space
     tokens = lambda c: T.shingle_hashes_of(T.token_hashes(c), 3)  # noqa: E731
+    return minhash_verified_pairs(d, tokens, num_hashes, bands,
+                                  jaccard_threshold)
+
+
+def minhash_verified_pairs(d: DataFrame, tokens, num_hashes: int,
+                           bands: int, threshold: float) -> DataFrame:
+    """Seeded MinHash-LSH (doc_a, doc_b, jaccard) pairs of a ``(doc_id,
+    text)`` frame, as described in ``minhash_lsh_pairs``; also the
+    executor's ``dedup_near`` path."""
     sigs = minhash_signature_agg(d, num_hashes=num_hashes, tokens=tokens)
     cand = lsh_band_candidates(sigs, num_hashes, bands, distinct=False,
                                carry="minhash")
-    good = estimate_filter_pairs(cand, num_hashes, jaccard_threshold)
-    return verify_pairs_jaccard(good, d, tokens, jaccard_threshold)
+    good = estimate_filter_pairs(cand, num_hashes, threshold)
+    return verify_pairs_jaccard(good, d, tokens, threshold)
 
 
 def incremental_dedup_minhash(spark: SparkSession, sf_dir: str,
@@ -707,12 +716,17 @@ def minhash_md5_pairs(spark: SparkSession, sf_dir: str,
     banded 4x2. Candidates depend only on the deterministic hashes, so
     both engines generate the identical candidate set — the
     probabilistic recall of banding does not perturb the oracle."""
-    d = (table(spark, sf_dir, "documents")
-         .select("doc_id", T.split_tokens("text").alias("toks"))
-         .select("doc_id",
-                 F.array_distinct(T.raw_shingles_of(F.col("toks"), 3))
-                 .alias("grams")))
-    return md5_minhash_verified_pairs(d, threshold)
+    return md5_minhash_verified_pairs(
+        md5_gram_sets(table(spark, sf_dir, "documents")), threshold)
+
+
+def md5_gram_sets(d: DataFrame) -> DataFrame:
+    """``(doc_id, grams)``: the DISTINCT raw word 3-shingles of each
+    ``(doc_id, text)`` row, the gram sets the md5 family hashes."""
+    return (d.select("doc_id", T.split_tokens("text").alias("toks"))
+            .select("doc_id",
+                    F.array_distinct(T.raw_shingles_of(F.col("toks"), 3))
+                    .alias("grams")))
 
 
 def md5_band_candidates(d: DataFrame) -> DataFrame:
@@ -779,11 +793,7 @@ def blocking_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (measured 5.7 s vs 2.6 s for the zip_with form, vs 1.9 s with
     # this barrier at sf0.1). Behind a materialized LogicalRDD the
     # inferred filter reads the built array — cheap.
-    gd = (table(spark, sf_dir, "documents")
-          .select("doc_id", T.split_tokens("text").alias("toks"))
-          .select("doc_id",
-                  F.array_distinct(T.raw_shingles_of(F.col("toks"), 3))
-                  .alias("grams"))
+    gd = (md5_gram_sets(table(spark, sf_dir, "documents"))
           .localCheckpoint(eager=True))
     fp = (table(spark, sf_dir, "documents")
           .select("doc_id", T.fingerprint("text").alias("fp")))
@@ -848,11 +858,7 @@ def fellegi_sunter_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
          .select("doc_id", "lang", "source",
                  F.expr("n_chars DIV 100").alias("len_bucket"),
                  T.fingerprint("text").alias("fp")))
-    grams = (table(spark, sf_dir, "documents")
-             .select("doc_id", T.split_tokens("text").alias("toks"))
-             .select("doc_id",
-                     F.array_distinct(T.raw_shingles_of(F.col("toks"), 3))
-                     .alias("grams")))
+    grams = md5_gram_sets(table(spark, sf_dir, "documents"))
     meta_a = d.select(F.col("doc_id").alias("doc_a"),
                       F.col("lang").alias("la"),
                       F.col("source").alias("sa"),
@@ -1892,11 +1898,7 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra signature build (vocab-linear) joined to the bounded verified
     pair set; integer ppm outputs.
     """
-    d = (table(spark, sf_dir, "documents")
-         .select("doc_id", T.split_tokens("text").alias("toks"))
-         .select("doc_id",
-                 F.array_distinct(T.raw_shingles_of(F.col("toks"), 3))
-                 .alias("grams"))
+    d = (md5_gram_sets(table(spark, sf_dir, "documents"))
          # tokenize once: the verified-pair pipeline AND the estimate's
          # own signature build both consume this frame (r9 scan census)
          .localCheckpoint(eager=True))

@@ -1708,7 +1708,12 @@ def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     checksum — the compact signature a fingerprint index stores per
     document. See ``_winnow_selected`` for the algorithm and the
     engine-portable packed-key construction."""
-    d = table(spark, sf_dir, "documents")
+    return winnow_summary(table(spark, sf_dir, "documents"))
+
+
+def winnow_summary(d: DataFrame) -> DataFrame:
+    """``(doc_id, n_fps, fp_xor, fp_min)`` of a ``(doc_id, text)`` frame's
+    winnowing fingerprints; also the executor's ``fingerprint`` step."""
     return (_winnow_selected(d)
             .groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("n_fps"),

@@ -58,6 +58,9 @@ def _drain_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
     window regardless of watermark position at end-of-stream), append
     for row streams.
 
+    The sink's temp view is dropped once the frame is taken (the frame
+    keeps the rows), so repeated drains leave the catalog unchanged.
+
     The stateful shuffle-partition count is pinned small (8) for the
     drain: a streaming query creates one state-store instance per
     shuffle partition and pays its init+commit per micro-batch, so a
@@ -82,7 +85,9 @@ def _drain_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name)
+    drained = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return drained
 
 
 def streaming_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -94,11 +94,6 @@ def compile_rule(field: str, rule: str) -> tuple[Column, str]:
                      f"known: {sorted(_RULES) + ['unique', 'matches:<re>', 'oneOf:a|b', 'inRange:lo:hi', 'minLength:n', 'maxLength:n']}")
 
 
-def register_rule(name: str, predicate_factory) -> None:
-    """Extension point: add a custom rule (field -> pass Column)."""
-    _RULES[name] = predicate_factory
-
-
 def validate_fields_split(
         df: DataFrame, validations: Iterable[Validation],
         cache: bool = True,

@@ -838,3 +838,101 @@ def test_every_bundled_example_runs_end_to_end(spark, tmp_path):
             files = [p for p in (root / name).rglob("part-*")
                      if not p.name.endswith(".crc")]
             assert files, f"{cfg.name}: sink {name!r} wrote no files"
+
+
+def _t(name, kind, **params):
+    return {"name": name, "type": kind, "params": params}
+
+
+def _bad_sink(node, path="/nonexistent"):
+    return {"input": node, "name": "out", "paths": [path],
+            "format": "parquet", "saveMode": "overwrite"}
+
+
+# one row per check in executor.check_dataflow: (transformations,
+# sinks, exception type, message the error must carry)
+BAD_METADATA = {
+    "unknown-kind": ([_t("x", "pivot", input="s")], [],
+                     ValueError, "unknown transformation type 'pivot'"),
+    "unknown-input": ([_t("x", "filter", input="nope", expr="age > 0")], [],
+                      KeyError, "references unknown input 'nope'"),
+    "split-before-validate": (
+        [_t("x", "filter", input="v_ok", expr="age > 0"),
+         _t("v", "validate_fields", input="s")], [],
+        KeyError, "references unknown input 'v_ok'"),
+    "unknown-right": ([_t("x", "join", input="s", right="nope", on=["name"])],
+                      [], KeyError, "references unknown right node 'nope'"),
+    "unknown-set-right": ([_t("x", "except", input="s", right="nope")], [],
+                          KeyError, "references unknown right node 'nope'"),
+    "unknown-union-input": ([_t("x", "union", inputs=["s", "nope"])], [],
+                            KeyError, "references unknown nodes ['nope']"),
+    "unknown-sink-input": ([], [_bad_sink("nope")],
+                           KeyError, "references unknown node 'nope'"),
+    "sort": ([_t("x", "sort", input="s")], [],
+             ValueError, "declares no columns"),
+    "limit": ([_t("x", "limit", input="s", n=-1)], [],
+              ValueError, "needs a non-negative 'n'"),
+    "rename": ([_t("x", "rename", input="s")], [],
+               ValueError, "declares no mapping"),
+    "join": ([_t("x", "join", input="s", right="s")], [],
+             ValueError, "declares no join keys"),
+    "aggregate": ([_t("x", "aggregate", input="s", groupBy=["office"])], [],
+                  ValueError, "declares no aggregates"),
+    "watermark": ([_t("x", "watermark", input="s", column="age")], [],
+                  ValueError, "needs 'column' and 'delay'"),
+    "dedup_near": ([_t("x", "dedup_near", input="s", textColumn="name")], [],
+                   ValueError, "needs 'idColumn'"),
+    "fingerprint": ([_t("x", "fingerprint", input="s", textColumn="name")],
+                    [], ValueError, "needs 'idColumn'"),
+    "window": ([_t("x", "window", input="s", partitionBy=["office"])], [],
+               ValueError, "declares no fields"),
+    "topk-n": ([_t("x", "topk", input="s", orderBy=["age"])], [],
+               ValueError, "needs a positive 'n'"),
+    "topk-orderBy": ([_t("x", "topk", input="s", n=1)], [],
+                     ValueError, "declares no orderBy"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(BAD_METADATA))
+def test_bad_metadata_fails_before_any_spark_job(spark, tmp_path, case):
+    """Each bad-metadata case raises its named error before any source
+    is read. The source is schema-less JSON, so reading it would start
+    a schema-inference job; the job group must stay empty."""
+    import re
+
+    transformations, sinks, exc, message = BAD_METADATA[case]
+    src = tmp_path / "in.json"
+    src.write_text("\n".join(json.dumps(r) for r in FIXTURE_ROWS))
+    flow = parse_metadata({"dataflows": [{
+        "name": "bad",
+        "sources": [{"name": "s", "path": str(src), "format": "json"}],
+        "transformations": transformations, "sinks": sinks,
+    }]}).dataflows[0]
+    sc = spark.sparkContext
+    group = f"bad-metadata-{case}"
+    sc.setJobGroup(group, "bad metadata must start no job")
+    try:
+        with pytest.raises(exc, match=re.escape(message)):
+            PipelineExecutor(spark).run_dataflow(flow)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_process_checks_every_dataflow_before_running_any(spark, tmp_path):
+    """A good dataflow followed by a bad one: process() rejects the file
+    before the good dataflow writes its sink."""
+    src = tmp_path / "in.json"
+    src.write_text("\n".join(json.dumps(r) for r in FIXTURE_ROWS))
+    out = tmp_path / "o"
+
+    def flow(name, sink_input):
+        return {"name": name,
+                "sources": [{"name": "s", "path": str(src), "format": "json"}],
+                "transformations": [], "sinks": [_bad_sink(sink_input, str(out))]}
+
+    meta = parse_metadata({"dataflows": [flow("good", "s"),
+                                         flow("bad", "nope")]})
+    with pytest.raises(KeyError, match="unknown node 'nope'"):
+        PipelineExecutor(spark).process(meta)
+    assert not (out / "out").exists()

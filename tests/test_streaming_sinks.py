@@ -723,3 +723,23 @@ def test_streaming_fanout_replays_group_after_sink_failure(
     text = _source_log_text(f"{tmp_path}/out/events.checkpoint")
     for f in range(3):
         assert text.count(f"part{f}.json") == 1
+
+
+def test_memory_drains_leave_catalog_unchanged(spark, tmp_path):
+    """Each drain's memory-sink view is dropped once its frame is taken:
+    two drains leave the session catalog as it was, and the returned
+    frames still hold every drained row."""
+    from spark_kafka_airflow_pipeline_spark.streaming.pipelines import (
+        _drain_to_memory,
+    )
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "p0.json").write_text('{"k": 1}\n{"k": 2}\n')
+    before = sorted(t.name for t in spark.catalog.listTables())
+    frames = [_drain_to_memory(
+        spark.readStream.schema("k long").json(str(src)), "append")
+        for _ in range(2)]
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+    for f in frames:
+        assert sorted(r.k for r in f.collect()) == [1, 2]
